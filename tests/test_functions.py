@@ -40,6 +40,34 @@ def test_minhash_lsh_candidates_contain_dups(docs):
     assert (0, 1) in cands  # near dup collides in some band w.h.p.
 
 
+def test_minhash_family_finds_planted_variant(spark, tmp_path):
+    """Docs 97 and 300 of the seed-21 generated curation corpus are a
+    planted base/variant pair (Jaccard ~0.99). With hash coefficients in
+    arithmetic progression one shingle was the minimum of hashes 0, 2, 4
+    and 6 and the pair matched no LSH band at the registered
+    _MH_K/_MH_BANDS; independent per-hash parameters must bucket them."""
+    import json
+    import os
+
+    from perfbench import gen
+    from thrill_spark.plans import queries  # noqa: F401  (loads the query modules in order)
+    from thrill_spark.plans.queries_llm import _MH_BANDS, _MH_K
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "perfbench", "spec.json")) as f:
+        spec = json.load(f)
+    gen.generate("curation_pipeline", spec, 21, str(tmp_path))
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet")).filter(
+        F.col("doc_id").isin(97, 300)
+    )
+    sig = D.minhash_signatures(docs, num_hashes=_MH_K)
+    cands = {
+        (r["id_a"], r["id_b"])
+        for r in D.lsh_candidate_pairs(sig, num_hashes=_MH_K, bands=_MH_BANDS).collect()
+    }
+    assert (97, 300) in cands
+
+
 def test_simhash_similarity_structure(docs):
     sigs = {r["doc_id"]: r["simhash"] for r in D.simhash(docs, bits=32).collect()}
     assert sigs[0] == sigs[3]

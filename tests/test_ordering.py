@@ -99,6 +99,41 @@ def test_sliding_window_halo_matches_naive(spark, par):
         assert r["s"] == sum(range(v - 4, v + 1))
 
 
+def test_halo_windows_cross_bucket_boundaries(spark):
+    """140k rows span three halo buckets (bucket_rows = max(64*k, 65536)),
+    so rows at both bucket edges need the halo: the backward one
+    (sliding_window) and the forward one (flat_window_partial). Both
+    must equal a single-partition global window."""
+    from pyspark.sql import Window
+
+    n, k = 140_000, 5
+    df = spark.range(n).select(
+        F.col("id").alias("v"), (F.col("id") * 7919 % 1000).alias("x")
+    ).repartition(4)
+    g = Window.orderBy("v")
+
+    def same(got, want):
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+
+    back = g.rowsBetween(-(k - 1), 0)
+    same(
+        O.sliding_window(df, ["v"], size=k, aggs={"s": F.sum("x")}).select("v", "x", "s"),
+        df.select("v", "x", F.sum("x").over(back).alias("s")).filter(F.col("v") >= k - 1),
+    )
+    fwd = g.rowsBetween(0, k - 1)
+    same(
+        O.flat_window_partial(df, ["v"], size=k, aggs={"s": F.sum("x")}).select(
+            "v", "x", "window_size", "s"
+        ),
+        df.select(
+            "v", "x",
+            F.count(F.lit(1)).over(fwd).alias("window_size"),
+            F.sum("x").over(fwd).alias("s"),
+        ),
+    )
+
+
 def test_sliding_window_partial_tail(spark, par):
     df = spark.range(10).withColumnRenamed("id", "v")
     out = O.sliding_window(df, ["v"], 4, {"c": F.count("*")}, partial_tail=True).collect()
@@ -186,17 +221,6 @@ def test_prefix_scan_generic_fold_no_sniffing(spark):
         cur = v if cur is None else min(cur, v)
         expect.append(cur)
     assert [r["rmin"] for r in out] == expect
-    # explicit python combiner path
-    out2 = (
-        O.prefix_scan(df, ["k"], "v", F.max, F.greatest, name="rmax", combine_scalar=max)
-        .orderBy("k")
-        .collect()
-    )
-    expect2, cur = [], None
-    for v in vals:
-        cur = v if cur is None else max(cur, v)
-        expect2.append(cur)
-    assert [r["rmax"] for r in out2] == expect2
 
 
 def test_with_index_broadcast_offsets_above_threshold(spark):
@@ -233,9 +257,8 @@ def test_release_persisted_clears_cache(spark):
 
 # ---------------------------------------------------------------------------
 # _leading_numeric_key detection (the explicit-bucket gate): bare
-# columns qualify (by name or Column, via the Catalyst expr, not the
-# repr), while .desc()/expressions/aliased-expressions fall back to
-# the legacy path (None).
+# columns qualify (by name or bare F.col), while .desc()/expressions/
+# aliased-expressions fall back to the legacy path (None).
 # ---------------------------------------------------------------------------
 def test_leading_numeric_key_detection(spark):
     df = spark.range(10).select(

@@ -95,7 +95,7 @@ _scratch_cleanup_registered: set[str] = set()
 # the same way can reuse the exchange (guide §2.4).
 #
 # The spread is OPT-IN per call site (load_table(..., spread=True)),
-# not blanket: the one-JVM alternating A/B (tools/ab_spread.py, pass
+# not blanket: a one-JVM alternating A/B of spread on vs off (pass
 # min-of-3 at sf0.1) showed the win is specific to queries with heavy
 # per-row compute between the scan and the first natural shuffle
 # (tokenize/shingle/regex/decimal-agg: ratios 0.46-0.77), while
@@ -113,23 +113,15 @@ _SPREAD_KEYS = {
     "events": "event_id",
     "customer": "c_custkey",
 }
-_SPREAD_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", 512 * 1024))
+_SPREAD_MIN_BYTES = 512 * 1024
 # scan split counts are layout metadata, not results: memoized per
 # (session, path) so repeated load_table calls don't replan the probe
 _scan_parts_cache: dict[tuple[str, str], int] = {}
 
 
-# Toggle for A/B measurement (tools/ab_spread.py): flipping this inside
-# one JVM lets the alternating min-of-N protocol attribute per-query
-# movement to the spread alone, free of ambient host drift.
-_SPREAD_ENABLED = True
-
-
 def _spread_scan(
     spark: SparkSession, df: DataFrame, path: str, name: str
 ) -> DataFrame:
-    if not _SPREAD_ENABLED:
-        return df
     key_col = _SPREAD_KEYS.get(name)
     if key_col is None:
         return df

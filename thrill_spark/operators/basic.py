@@ -99,7 +99,7 @@ def exact_sample_distributed(df: DataFrame, k: int, seed: int = 42) -> DataFrame
     # (downstream of sample()/rand()/a shuffle), recomputation between
     # the count job and the pick job could change partition contents,
     # making quotas wrong or pids unknown — same discipline as
-    # ordering._range_partitioned.
+    # ordering._order_partitioned.
     with_pid = _persist(df.withColumn(pid_col, F.spark_partition_id()))
     sizes = {
         r["pid"]: r["n"]

@@ -8,40 +8,45 @@ zip_with_index.hpp:30-38, prefix_sum.hpp:28, window.hpp:142).
 Spark DataFrames are unordered multisets, so order must be materialized
 as data. This module provides that as a library convention:
 
-- ``with_index(df, order_by)``: global 0-based ``_idx`` via a scalable
-  two-phase pattern (range-partition + per-partition row_number + driver
-  offsets). Never a single-partition global window — that is the classic
-  100 TB bottleneck.
-- ``prefix_sum``: running aggregate via the same two-phase pattern
-  (per-partition running sum + cumulative partition totals), mirroring
-  the structure (not the code) of Thrill's PrefixSum collective
-  (thrill/net/flow_control_channel.hpp PrefixSum semantics).
+- ``with_index`` / ``prefix_sum`` / ``prefix_scan``: global 0-based
+  ``_idx``, running sum and running any-associative-op, all on ONE
+  two-phase scan core (``_scan``): partition-local window over a
+  range-partitioned input, plus exclusive carries folded from the
+  O(#partitions) per-partition totals. This mirrors how Thrill builds
+  ZipWithIndex / PrefixSum / ExPrefixSum on the single (Ex)PrefixSum
+  collective of its FlowControlChannel. Never a single-partition global
+  window — that is the classic 100 TB bottleneck.
 - ``zip_dfs``: positional Zip of K DataFrames (cut / pad variants,
   thrill/api/zip.hpp:426-652) as an ``_idx`` equi-join.
-- ``sliding_window`` / ``disjoint_window``: k-consecutive-item windows
-  (thrill/api/window.hpp:142,389) via rowsBetween / idx-div-k grouping.
+- ``sliding_window`` / ``flat_window_partial`` / ``disjoint_window``:
+  k-consecutive-item windows (thrill/api/window.hpp:142,215,389) via
+  rowsBetween over ``_idx`` buckets with a (k-1)-row halo
+  (``_halo_window``) / idx-div-k grouping.
 - ``reduce_to_index`` / ``group_to_index``: dense-array aggregation with
   neutral-element holes (thrill/api/dia.hpp:1306-1311) via agg + range
   fill join.
 - ``merge_sorted`` / ``concat``: order-preserving union
   (thrill/api/merge.hpp:44-76, concat.hpp:35).
 
-Scale notes: the two-phase pattern costs one boundary-sampling job
+Scale notes: a ``_scan`` costs one boundary-sampling job
 (percentile_approx scalar agg, memoized per source plan) and one
-count-per-bucket job beside the main pass — the same shape as
-RDD.zipWithIndex. With the explicit-bucket path (leading numeric order
-key) the main pass performs exactly ONE wide shuffle: the bucket id is
-a real column, so Window.partitionBy(bucket), groupBy(bucket), and the
-within-partition sort all reuse that clustering. The bucket count
-follows spark.sql.shuffle.partitions, so per-partition window state
-stays bounded at any data size.
+totals-per-bucket job beside the main pass — the same shape as
+RDD.zipWithIndex — plus, for ``prefix_scan``, one tiny local job that
+folds the totals with the caller's combine. With the explicit-bucket
+path (leading numeric order key) the main pass performs exactly ONE
+wide shuffle: the bucket id is a real column, so
+Window.partitionBy(bucket), groupBy(bucket), and the within-partition
+sort all reuse that clustering. The bucket count follows
+spark.sql.shuffle.partitions, so per-partition window state stays
+bounded at any data size.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from operator import add
+from typing import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -87,30 +92,23 @@ def _cols(order_by: Sequence[str | Column]) -> list[Column]:
 def _leading_numeric_key(df: DataFrame, order_by: Sequence[str | Column]):
     """The leading order key as a plain ascending numeric Column, or
     None when the explicit-bucket path does not apply (descending /
-    expression sort keys, or non-numeric leading type)."""
+    expression sort keys, or non-numeric leading type).
+
+    A Column qualifies only as a bare F.col(...), recognised by its
+    str() form ``Column<'name'>``: .desc()/.asc_nulls_last()/arithmetic/
+    aliased expressions print differently and fall back to the
+    repartitionByRange path. PySpark exposes no public accessor for a
+    Column's expression, so the repr is the detection."""
     from pyspark.sql import types as T
 
     first = order_by[0]
     if isinstance(first, str):
         name = first
     else:
-        # only a bare F.col(...) qualifies; .desc()/.asc_nulls_last()/
-        # arithmetic expressions fall back to the legacy path. Primary
-        # detection asks the Catalyst expression directly (robust to
-        # repr-format changes); the str(Column) parse is fallback only
-        # (e.g. Spark Connect columns without _jc).
-        name = None
-        try:
-            expr = first._jc.expr()
-            if expr.getClass().getSimpleName() == "UnresolvedAttribute":
-                name = expr.name()
-        except Exception:
-            pass
-        if name is None:
-            s = str(first)
-            if not (s.startswith("Column<'") and s.endswith("'>")):
-                return None
-            name = s[len("Column<'") : -len("'>")]
+        s = str(first)
+        if not (s.startswith("Column<'") and s.endswith("'>")):
+            return None
+        name = s[len("Column<'") : -len("'>")]
     if name not in df.columns:
         return None
     dt = df.schema[name].dataType
@@ -156,9 +154,10 @@ def _bucket_boundaries(df: DataFrame, key: Column, n_buckets: int) -> list | Non
     return out
 
 
-def _range_partitioned(df: DataFrame, order_by: Sequence[str | Column], persist: bool):
-    """Range-partition + locally sort df by order_by; return
-    (df + partition-key column, its name, offsets {key: rows_before}).
+def _order_partitioned(df: DataFrame, order_by: Sequence[str | Column]):
+    """Range-partition + locally sort df by order_by; return (part,
+    keycol) where keycol is the per-partition key every downstream
+    Window.partitionBy / groupBy should use.
 
     Preferred path (leading order key is a plain ascending numeric
     column with enough distinct values): EXPLICIT range buckets — key
@@ -176,29 +175,10 @@ def _range_partitioned(df: DataFrame, order_by: Sequence[str | Column], persist:
     Fallback (descending/expression/string/low-cardinality leading
     keys): repartitionByRange + spark_partition_id, two shuffles.
 
-    offsets is a small driver-side dict {partition_key: rows_before}.
-    The df is persisted so the count job and downstream jobs share the
-    shuffle output (and, on the legacy path, because range boundaries
+    part is persisted so the totals job and downstream jobs share the
+    shuffle output (and, on the fallback path, because range boundaries
     come from nondeterministic sampling).
     """
-    part, keycol = _order_partitioned(df, order_by, persist)
-    counts = {
-        r[keycol]: r["cnt"]
-        for r in part.groupBy(keycol).agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets: dict[int, int] = {}
-    running = 0
-    for pid in sorted(counts):
-        offsets[pid] = running
-        running += counts[pid]
-    return part, keycol, offsets
-
-
-def _order_partitioned(df: DataFrame, order_by: Sequence[str | Column], persist: bool):
-    """Partition + locally sort df for an ordered-array op; returns
-    (part, keycol) where keycol is the per-partition key every
-    downstream Window.partitionBy / groupBy should use. See
-    _range_partitioned's docstring for the two paths."""
     cols = _cols(order_by)
     key = _leading_numeric_key(df, order_by)
     n_buckets = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -215,59 +195,93 @@ def _order_partitioned(df: DataFrame, order_by: Sequence[str | Column], persist:
             .repartition(n_buckets, F.col(_BKT))
             .sortWithinPartitions(F.col(_BKT), *cols)
         )
-        if persist:
-            part = _persist(part)
-        return part, _BKT
+        return _persist(part), _BKT
     part = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
-    part = part.withColumn(_PID, F.spark_partition_id())
-    if persist:
-        part = _persist(part)
-    return part, _PID
+    return _persist(part.withColumn(_PID, F.spark_partition_id())), _PID
 
 
-def _with_carry(
-    part: DataFrame,
-    mapping: dict[int, object],
-    name: str = _CARRY,
-    key: str = _PID,
-) -> DataFrame:
-    """Attach mapping[pid] as column `name` (null where pid absent).
+def _with_carry(part: DataFrame, mapping: dict[int, object], key: str) -> DataFrame:
+    """Attach mapping[part[key]] (non-empty) as column _CARRY, null
+    where the key is absent.
 
     Small maps inline as a create_map of literals (cheapest to analyze);
     past OFFSET_LITERAL_MAX partitions the map rides in as a
     broadcast-joined offsets DataFrame so plan size stays O(1) in the
     partition count."""
-    if not mapping:
-        return part.withColumn(name, F.lit(None))
     if len(mapping) <= OFFSET_LITERAL_MAX:
         m = F.create_map(*[F.lit(x) for kv in mapping.items() for x in kv])
-        return part.withColumn(name, m[F.col(key)])
+        return part.withColumn(_CARRY, m[F.col(key)])
     spark = part.sparkSession
     odf = spark.createDataFrame(
-        [(int(k), v) for k, v in mapping.items()], [key, name]
+        [(int(k), v) for k, v in mapping.items()], [key, _CARRY]
     )
     return part.join(F.broadcast(odf), on=key, how="left")
 
 
-def with_index(
+def _scan(
     df: DataFrame,
     order_by: Sequence[str | Column],
-    name: str = IDX,
-    persist: bool = True,
+    name: str,
+    total: Column,
+    local: Callable[[WindowSpec], Column],
+    combine: Callable[[Column, Column], Column],
+    fold: Callable[[list], list],
 ) -> DataFrame:
+    """The two-phase scan core of with_index / prefix_sum / prefix_scan
+    (Thrill builds ZipWithIndex and (Ex)PrefixSum on one collective the
+    same way, thrill/api/prefix_sum.hpp:28, zip_with_index.hpp:30-38).
+
+    1. _order_partitioned range-partitions and sorts df (persisted);
+    2. ONE groupBy(keycol) job computes ``total`` per partition;
+    3. ``fold`` maps the totals, in partition order, to exclusive
+       carries (None = no carry, e.g. the first partition);
+    4. column ``name`` = combine(carry, local(w)), where w is the
+       partition-local window ordered by order_by; rows without a carry
+       keep local(w).
+
+    The fold runs over O(#partitions) scalars, so no stage ever holds
+    more than one partition's rows."""
+    part, keycol = _order_partitioned(df, order_by)
+    totals = {
+        r[keycol]: r["tot"]
+        for r in part.groupBy(keycol).agg(total.alias("tot")).collect()
+    }
+    pids = sorted(totals)
+    carries = {
+        p: c for p, c in zip(pids, fold([totals[p] for p in pids])) if c is not None
+    }
+    out = local(Window.partitionBy(keycol).orderBy(*_cols(order_by)))
+    if carries:
+        part = _with_carry(part, carries, keycol)
+        carried = F.col(_CARRY)
+        out = F.when(carried.isNull(), out).otherwise(combine(carried, out))
+    return part.withColumn(name, out).drop(keycol, _CARRY)
+
+
+def _exclusive_sums(totals: list) -> list:
+    """Driver-side exclusive running sum [None, t0, t0+t1, ...]; null
+    totals (an all-null partition) add nothing, as in SQL SUM."""
+    out, running = [], None
+    for t in totals:
+        out.append(running)
+        if t is not None:
+            running = t if running is None else running + t
+    return out
+
+
+def with_index(df: DataFrame, order_by: Sequence[str | Column], name: str = IDX) -> DataFrame:
     """Materialize a global 0-based row index following order_by.
 
     Equivalent of Thrill ZipWithIndex (thrill/api/zip_with_index.hpp:30-38).
     order_by should be a total order (add a unique tiebreaker) for a
     deterministic result.
     """
-    part, keycol, offsets = _range_partitioned(df, order_by, persist)
-    part = _with_carry(part, offsets, key=keycol)
-    w = Window.partitionBy(keycol).orderBy(*_cols(order_by))
-    out = part.withColumn(
-        name, F.row_number().over(w) - 1 + F.coalesce(F.col(_CARRY), F.lit(0))
+    return _scan(
+        df, order_by, name, F.count("*"),
+        lambda w: F.row_number().over(w) - 1,
+        add,
+        _exclusive_sums,
     )
-    return out.drop(keycol, _CARRY)
 
 
 def sort_by(df: DataFrame, order_by: Sequence[str | Column], index: bool = False) -> DataFrame:
@@ -286,8 +300,6 @@ def prefix_scan(
     agg_fn,
     combine_fn,
     name: str = "prefix_scan",
-    persist: bool = True,
-    combine_scalar=None,
 ) -> DataFrame:
     """Generalized inclusive prefix scan with ANY associative operation
     (Thrill PrefixSum's full contract, thrill/api/prefix_sum.hpp:28 —
@@ -297,49 +309,21 @@ def prefix_scan(
     partition totals (e.g. F.sum, F.min, F.max, F.product).
     combine_fn: the same operation as a Column->Column binary (e.g.
     lambda a, b: a + b / F.least / F.greatest) merging the carried
-    partition offset into the local scan.
-    combine_scalar: optional Python-level (a, b) -> scalar of the same
-    operation. When given, the O(#partitions) carry fold runs as a plain
-    driver loop; when omitted, ALL exclusive prefix folds of the
-    partition totals are evaluated in ONE tiny local Spark job using
-    combine_fn itself (F.aggregate over literal-array slices) — no
-    expression-tree sniffing, correct for any associative combine.
+    partition offset into the local scan. ALL exclusive prefix folds of
+    the partition totals are evaluated in ONE tiny local Spark job using
+    combine_fn itself (_fold_prefixes) — no expression-tree sniffing,
+    correct for any associative combine.
 
-    Same two-phase shape as prefix_sum: range partition, local window
-    scan, O(#partitions) carry — no single-partition stage at any
+    Same two-phase shape as prefix_sum (_scan): range partition, local
+    window scan, O(#partitions) carry — no single-partition stage at any
     scale."""
     val = F.col(value) if isinstance(value, str) else value
-    cols = _cols(order_by)
-    part, keycol = _order_partitioned(df, order_by, persist)
-    totals = {
-        r[keycol]: r["tot"]
-        for r in part.groupBy(keycol).agg(agg_fn(val).alias("tot")).collect()
-    }
-    pids = sorted(totals)
-    if combine_scalar is not None:
-        offsets: dict[int, object] = {}
-        running = None
-        for pid in pids:
-            offsets[pid] = running  # None -> identity (no carry)
-            t = totals[pid]
-            running = t if running is None else combine_scalar(running, t)
-    else:
-        folds = _fold_prefixes(
-            df.sparkSession, [totals[p] for p in pids], combine_fn
-        )
-        offsets = dict(zip(pids, folds))
-    w = Window.partitionBy(keycol).orderBy(*cols)
-    local = agg_fn(val).over(w.rowsBetween(Window.unboundedPreceding, 0))
-    nonnull = {k: v for k, v in offsets.items() if v is not None}
-    if nonnull:
-        carried = F.col(_CARRY)
-        local = F.when(carried.isNull(), local).otherwise(combine_fn(carried, local))
-        return (
-            _with_carry(part, nonnull, key=keycol)
-            .withColumn(name, local)
-            .drop(keycol, _CARRY)
-        )
-    return part.withColumn(name, local).drop(keycol)
+    return _scan(
+        df, order_by, name, agg_fn(val),
+        lambda w: agg_fn(val).over(w.rowsBetween(Window.unboundedPreceding, 0)),
+        combine_fn,
+        lambda totals: _fold_prefixes(df.sparkSession, totals, combine_fn),
+    )
 
 
 def _fold_prefixes(spark, totals: list, combine_fn) -> list:
@@ -347,8 +331,7 @@ def _fold_prefixes(spark, totals: list, combine_fn) -> list:
     t0, t0⊕t1, ...]) evaluated in ONE local single-partition Spark job
     with the caller's own Column combine (ADVICE: no _jc string
     sniffing). Work is O(P^2) scalar combines in a single JVM task — at
-    P = shuffle partitions this is microseconds; for extreme partition
-    counts pass combine_scalar instead."""
+    P = shuffle partitions this is microseconds."""
     if not totals:
         return []
 
@@ -387,41 +370,24 @@ def prefix_sum(
     name: str = "prefix_sum",
     exclusive: bool = False,
     initial=None,
-    persist: bool = True,
 ) -> DataFrame:
     """Global running sum over order_by (Thrill PrefixSum/ExPrefixSum,
     thrill/api/prefix_sum.hpp:28, ex_prefix_sum.hpp).
 
-    Two-phase: per-range-partition running sum, plus a driver-side
-    cumulative of the O(#partitions) partition totals — no global
-    single-partition window.
+    Two-phase (_scan): per-range-partition running sum, plus a
+    driver-side cumulative of the O(#partitions) partition totals — no
+    global single-partition window.
     """
     val = F.col(value) if isinstance(value, str) else value
-    cols = _cols(order_by)
-    part, keycol = _order_partitioned(df, order_by, persist)
-    totals = {
-        r[keycol]: r["tot"]
-        for r in part.groupBy(keycol).agg(F.sum(val).alias("tot")).collect()
-    }
-    offsets: dict[int, object] = {}
-    running = None
-    for pid in sorted(totals):
-        offsets[pid] = running  # None -> zero
-        t = totals[pid]
-        running = t if running is None else running + t
-    w = Window.partitionBy(keycol).orderBy(*cols)
-    frame = w.rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0)
-    local = F.sum(val).over(frame)
-    if exclusive:
-        local = F.coalesce(local, F.lit(0))
-    nonnull = {k: v for k, v in offsets.items() if v is not None}
-    if nonnull:
-        part = _with_carry(part, nonnull, key=keycol)
-        local = local + F.coalesce(F.col(_CARRY), F.lit(0))
-    out = local
+
+    def local(w: WindowSpec) -> Column:
+        run = F.sum(val).over(w.rowsBetween(Window.unboundedPreceding, -1 if exclusive else 0))
+        return F.coalesce(run, F.lit(0)) if exclusive else run
+
+    out = _scan(df, order_by, name, F.sum(val), local, add, _exclusive_sums)
     if initial is not None:
-        out = out + F.lit(initial)
-    return part.withColumn(name, out).drop(keycol, _CARRY)
+        out = out.withColumn(name, F.col(name) + F.lit(initial))
+    return out
 
 
 def zip_dfs(
@@ -472,43 +438,43 @@ def sliding_window(
     windows; Thrill only calls the window fn for complete windows unless
     a partial-window fn is given — partial_tail=True keeps them.
     """
-    idf = with_index(df, order_by)
-    w = (
-        Window.partitionBy()  # replaced below by two-phase pattern when needed
-        .orderBy(IDX)
-        .rowsBetween(-(size - 1), 0)
-    )
-    # NOTE: a frame of fixed small k only needs k-1 rows of cross-partition
-    # context. Implemented with a bounded self-join to stay scalable:
-    # each row joins its k-1 predecessors via an _idx band join would be
-    # O(n*k); instead use partition-local windows with a k-1 row halo.
-    return _halo_window(idf, size, aggs, partial_tail)
+    out = _halo_window(with_index(df, order_by), size, aggs, forward=False)
+    return out if partial_tail else out.filter(F.col(IDX) >= size - 1)
 
 
-def _halo_window(idf: DataFrame, size: int, aggs: dict[str, Column], partial_tail: bool) -> DataFrame:
-    """Partition-parallel sliding window with a (k-1)-row halo.
+def _halo_window(
+    idf: DataFrame, size: int, aggs: dict[str, Column], forward: bool
+) -> DataFrame:
+    """Partition-parallel k-row window over an ``_idx``-indexed df with
+    a (k-1)-row halo.
 
-    Rows are bucketed by ``_idx div B`` (B >> k); each bucket also
-    receives copies of the last k-1 rows of the previous bucket, so a
+    Rows are bucketed by ``_idx div B`` (B >> k). Backward
+    (forward=False, frame [current-(k-1), current]): each bucket also
+    receives copies of the LAST k-1 rows of the previous bucket.
+    Forward (frame [current, current+k-1]): each bucket receives copies
+    of the FIRST k-1 rows of the next bucket. Either way a
     partition-local window over the bucket computes exact global
-    results. This keeps the plan shuffle-bounded and skew-free at any
-    scale, unlike a global Window.orderBy with no partitionBy.
+    results; the halo copies are dropped afterwards. This keeps the plan
+    shuffle-bounded and skew-free at any scale, unlike a global
+    Window.orderBy with no partitionBy.
     """
     bucket_rows = max(size * 64, 65536)
     b = F.floor(F.col(IDX) / F.lit(bucket_rows))
+    pos = F.col(IDX) % bucket_rows
+    if forward:
+        frame = (0, size - 1)
+        halo = idf.withColumn("_bkt", b - 1).filter(
+            (pos <= size - 2) & (F.col(IDX) >= bucket_rows)
+        )
+    else:
+        frame = (-(size - 1), 0)
+        halo = idf.withColumn("_bkt", b + 1).filter(pos >= bucket_rows - (size - 1))
     own = idf.withColumn("_bkt", b).withColumn("_halo", F.lit(False))
-    halo = (
-        idf.withColumn("_bkt", b + 1)
-        .filter((F.col(IDX) % bucket_rows) >= bucket_rows - (size - 1))
-        .withColumn("_halo", F.lit(True))
-    )
-    both = own.unionByName(halo)
-    w = Window.partitionBy("_bkt").orderBy(IDX).rowsBetween(-(size - 1), 0)
+    both = own.unionByName(halo.withColumn("_halo", F.lit(True)))
+    w = Window.partitionBy("_bkt").orderBy(IDX).rowsBetween(*frame)
     out = both.select(
         "*", *[expr.over(w).alias(name) for name, expr in aggs.items()]
     ).filter(~F.col("_halo"))
-    if not partial_tail:
-        out = out.filter(F.col(IDX) >= size - 1)
     return out.drop("_bkt", "_halo")
 
 
@@ -523,31 +489,13 @@ def flat_window_partial(
     (thrill/api/window.hpp:215-236): one output per START index — the
     window is the k items beginning at that row, and the last <k
     windows are emitted as partial suffixes (the drain loop PushData
-    runs on the last worker). Forward-halo mirror of _halo_window:
-    each bucket additionally receives copies of the FIRST k-1 rows of
-    the next bucket, so partition-local [current, current+k-1] frames
-    are exact globally — shuffle-bounded at any scale, no global
-    single-partition window."""
-    idf = with_index(df, order_by)
-    bucket_rows = max(size * 64, 65536)
-    b = F.floor(F.col(IDX) / F.lit(bucket_rows))
-    own = idf.withColumn("_bkt", b).withColumn("_halo", F.lit(False))
-    halo = (
-        idf.withColumn("_bkt", b - 1)
-        .filter(
-            ((F.col(IDX) % bucket_rows) <= size - 2)
-            & (F.col(IDX) >= bucket_rows)
-        )
-        .withColumn("_halo", F.lit(True))
+    runs on the last worker). Uses the forward halo of _halo_window, so
+    partition-local [current, current+k-1] frames are exact globally —
+    shuffle-bounded at any scale, no global single-partition window.
+    ``size_col`` holds each window's item count."""
+    return _halo_window(
+        with_index(df, order_by), size, {size_col: F.count(F.lit(1)), **aggs}, forward=True
     )
-    both = own.unionByName(halo)
-    w = Window.partitionBy("_bkt").orderBy(IDX).rowsBetween(0, size - 1)
-    out = both.select(
-        "*",
-        F.count(F.lit(1)).over(w).alias(size_col),
-        *[expr.over(w).alias(name) for name, expr in aggs.items()],
-    ).filter(~F.col("_halo"))
-    return out.drop("_bkt", "_halo")
 
 
 def disjoint_window(
